@@ -20,8 +20,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from deep_ner_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 SEED = 42
 
 # transcript-table scale by sf: ~1.2M turns/sf-unit (sf0.1 -> ~120k turns)

@@ -34,6 +34,9 @@ def fit_shape_vocab(
     """Shape vocabulary: corpus frequency >= min_freq, sorted (elmo_ner.py:492-500).
 
     Empty shapes are excluded (elmo_ner.py:419-421 skips '' before counting).
+    The vocabulary is collected whole, so it is sorted on the driver: a
+    Spark ``orderBy`` would add a range-partition sample job and a sort
+    stage, and Python's code-point order equals Spark's UTF8_BINARY order.
     """
     rows = (
         tokenized_turns.select(F.explode(shapes_col).alias("shape"))
@@ -41,11 +44,10 @@ def fit_shape_vocab(
         .groupBy("shape")
         .count()
         .where(F.col("count") >= min_freq)
-        .orderBy("shape")
         .select("shape")
         .collect()
     )
-    return tuple(r["shape"] for r in rows)
+    return tuple(sorted(r["shape"] for r in rows))
 
 
 def fit_shape_vocab_from_text(
@@ -97,17 +99,17 @@ def fit_shape_vocab_from_text(
         .groupBy("shape")
         .agg(F.sum("cnt").alias("cnt"))
         .where((F.col("cnt") >= min_freq) & (F.col("shape") != ""))
-        .orderBy("shape")
         .select("shape")
         .collect()
     )
-    return tuple(r["shape"] for r in rows)
+    return tuple(sorted(r["shape"] for r in rows))
 
 
 def fit_classes_list(entity_spans: DataFrame, ne_col: str = "ne_type") -> Tuple[str, ...]:
     """Sorted distinct entity types (elmo_ner.py:1124-1141,1155)."""
-    rows = entity_spans.select(ne_col).distinct().orderBy(ne_col).collect()
-    return tuple(r[ne_col] for r in rows)
+    rows = entity_spans.select(ne_col).distinct().collect()
+    # nulls first, where Spark's ascending sort put them
+    return tuple(sorted((r[ne_col] for r in rows), key=lambda v: (v is not None, v or "")))
 
 
 # --- pure assembly functions (shared by UDF bodies and parity tests) ---------
@@ -207,8 +209,8 @@ def make_feature_matrix_udf(
 
     * the per-token feature vector (embedding ‖ shape one-hot ‖ linguistic
       one-hot) depends only on (token, pos, dep), so it is computed once per
-      distinct triple and cached for the executor's lifetime — the per-turn
-      work is a stack of cached rows plus the BOS/EOS position flags.  This
+      distinct triple and cached for the Arrow batch — the per-turn work
+      is a stack of cached rows plus the BOS/EOS position flags.  This
       also removes the reference's linear vocab.index() per-token hot spot
       (elmo_ner.py:507).
     * ``fmt='binary'`` packs the matrix as little-endian float32 bytes (one
@@ -314,14 +316,15 @@ def make_fused_featurize_udf(
     fields.append(T.StructField("features", T.BinaryType()))
     schema = T.StructType(fields)
 
-    # executor-lifetime caches shared across Arrow batches: distinct
+    # per-task cache shared across the task's Arrow batches: distinct
     # (token, is_first, parity) triples map to a row in a growing vector
     # table V, so the per-batch work is ONE fancy-index gather V[ids] plus
     # vectorized BOS/EOS flag scatters — no per-token row copies, no
     # per-turn np.zeros (the VERDICT r2 item: batch numpy one-hot scatter).
-    # The cache is BOUNDED: with Python worker reuse (default on) and a
-    # Zipf-tailed corpus (ids, numbers, typos) an unbounded table would
-    # grow without limit over a long-lived worker.  At cache_max_entries
+    # PySpark unpickles the closure for every task, so ``state`` starts
+    # empty in every task, even in a reused worker.  The cache is BOUNDED:
+    # over a large partition of a Zipf-tailed corpus (ids, numbers, typos)
+    # an unbounded table would grow with the partition.  At cache_max_entries
     # distinct triples (~width*4 bytes each; default caps V at ~100-200MB)
     # the table is reset — correctness is unaffected (rows are recomputed),
     # only the tail of rare tokens re-pays its vector build.
@@ -350,7 +353,7 @@ def make_fused_featurize_udf(
 
     @pandas_udf(schema)
     def fused(texts: pd.Series) -> pd.DataFrame:
-        # bound the executor-lifetime cache BETWEEN batches (a mid-batch
+        # bound the per-task cache BETWEEN batches (a mid-batch
         # reset would orphan row ids already collected for this batch);
         # one batch adds at most batch_rows*max_seq_length entries on top.
         if state["n"] >= cache_max_entries:
@@ -419,7 +422,7 @@ def make_fused_featurize_arrow_fn(
     norm_col: str = "norm_text",
 ):
     """``mapInArrow`` twin of :func:`make_fused_featurize_udf` — same
-    per-token vector table, same bounded executor-lifetime cache, same
+    per-token vector table, same bounded per-task cache, same
     outputs bit-for-bit, minus two full copies of the feature bytes.
 
     The pandas_udf path materialized the batch matrix three times:
@@ -482,7 +485,7 @@ def make_fused_featurize_arrow_fn(
             ncol = rb.schema.get_field_index(norm_col)
             for off in range(0, rb.num_rows, chunk_rows):
                 sub = rb.slice(off, min(chunk_rows, rb.num_rows - off))
-                # bound the executor-lifetime cache BETWEEN chunks (a
+                # bound the per-task cache BETWEEN chunks (a
                 # mid-chunk reset would orphan row ids already collected)
                 if state["n"] >= cache_max_entries:
                     state["V"] = np.zeros((1024, width), dtype=np.float32)

@@ -40,13 +40,23 @@ def package_zip() -> str:
     return out
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):  # Linux
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "deep-ner-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # one-ish partition per core locally; on a cluster this is overridden

@@ -191,10 +191,12 @@ def test_entity_spans_slice_to_phrases(data, spark):
 
 
 def test_fused_featurize_cache_cap_resets_without_changing_output():
-    """The executor-lifetime vector table is bounded (ADVICE r3): when the
-    distinct-triple count exceeds cache_max_entries the table resets
-    BETWEEN Arrow batches.  A capped udf must emit byte-identical features
-    to an uncapped one across repeated calls (rows recomputed, not stale)."""
+    """The per-task vector table is bounded (ADVICE r3): PySpark unpickles
+    the udf for every task, so the table lives for one task's Arrow
+    batches, and when the distinct-triple count exceeds cache_max_entries
+    it resets BETWEEN those batches.  A capped udf must emit byte-identical
+    features to an uncapped one across repeated calls (rows recomputed, not
+    stale)."""
     import pandas as pd
 
     from deep_ner_spark.operators.features import make_fused_featurize_udf
