@@ -8,8 +8,8 @@ shuffle-aware order:
       -> sessionize on ts gaps (W4)                          [reuses it]
       -> forward-fill sparse role/tool (W3)                  [reuses it]
       -> token-count lag/lead turn context (W8, JVM regexp)  [reuses it]
-      -> normalize + tokenize + bounds + shapes + pos/dep    [narrow Arrow]
-      -> per-turn feature matrix, binary float32             [narrow Arrow]
+      -> normalize + tokenize + bounds + binary float32
+         per-turn feature matrix, one mapInArrow pass        [narrow Arrow]
 
 Shuffle budget: exactly ONE exchange by conv_id — the as-of union's —
 serves every window (verified by tests/test_plans.py); everything after it
@@ -24,7 +24,7 @@ from typing import Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deep_ner_spark.operators.asof import asof_join, asof_join_salted
+from deep_ner_spark.operators.asof import asof_join
 from deep_ner_spark.operators.features import featurize_fused, fit_shape_vocab_from_text
 from deep_ner_spark.operators.windows import forward_fill, lag_lead, sessionize
 
@@ -36,17 +36,14 @@ def featurize_transcripts(
     max_seq_length: int = 32,
     emb_dim: int = 16,
     session_gap_seconds: float = 1800.0,
-    salted: bool = False,
-    n_salts: int = 8,
-    features_fmt: str = "binary",
     state_seq_col: str | None = None,
 ) -> Tuple[DataFrame, Tuple[str, ...]]:
     """Returns (featurized turns DataFrame, fitted shape vocabulary).
 
     Stage order is shuffle-aware: the windowed operators and the as-of join
     run FIRST, on the slim transcript columns (one small exchange by
-    conv_id), and the tokenizer + feature assembly run LAST as narrow Arrow
-    passes over the already-exchanged rows — the multi-GB feature blobs are
+    conv_id), and the tokenizer + feature assembly run LAST as one narrow
+    Arrow pass over the already-exchanged rows — the multi-GB feature blobs are
     produced after the last exchange and never shuffle.  (The reverse
     order pushed ~20x the bytes through every window exchange.)
     """
@@ -55,15 +52,13 @@ def featurize_transcripts(
         # as-of runs first: its union-tag window hash-partitions by conv_id,
         # and every later window reuses that partitioning (sorts only)
         state = entity_state.withColumnRenamed("entity_id", "conv_id")
-        join = asof_join_salted if salted else asof_join
-        kwargs = {"n_salts": n_salts} if salted else {}
         # state_seq_col breaks ties among state rows sharing one (conv, ts):
         # without it, F.last over fully-equal sort keys picks whichever row
         # the shuffle ordered last, making the attached state nondeterministic
         state_cols = ["conv_id", "ts", "state"] + (
             [state_seq_col] if state_seq_col else []
         )
-        slim = join(
+        slim = asof_join(
             slim,
             state.select(*state_cols),
             key_cols=["conv_id"],
@@ -71,7 +66,6 @@ def featurize_transcripts(
             state_cols=["state"],
             seq_col="turn_idx",
             state_seq_col=state_seq_col,
-            **kwargs,
         )
     slim = sessionize(
         slim, ["conv_id"], "ts", session_gap_seconds, order_cols=["turn_idx"]

@@ -360,7 +360,17 @@ def test_ivf_codebook_cache_misses_on_fixture_regeneration(spark, tmp_path):
     a stale codebook can never be served against fresh data (the r6
     streaming-cache bug class, IVF edition — r7 VERDICT task 7).  Fails
     if the key drops the `_content_stamp` component."""
+    import os
+    from pathlib import Path
+
     import __spark_entry__ as e
+
+    # the harness caches into a shared tmpfs dir; remove only what this
+    # test adds there
+    cache_dir = Path(
+        "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    ) / "deep_ner_ivf_codebook"
+    before = set(cache_dir.iterdir()) if cache_dir.is_dir() else set()
 
     rng = np.random.default_rng(5)
 
@@ -376,20 +386,25 @@ def test_ivf_codebook_cache_misses_on_fixture_regeneration(spark, tmp_path):
             str(tmp_path / "embeddings.parquet")
         )
 
-    write_emb(1.0)
-    cb1 = e._ivf_codebook_cached(spark, str(tmp_path), n_lists=2,
-                                 kmeans_iters=2, seed=7)
-    # identical bytes -> cache hit, bit-equal codebook
-    cb2 = e._ivf_codebook_cached(spark, str(tmp_path), n_lists=2,
-                                 kmeans_iters=2, seed=7)
-    assert cb2 == cb1
-    # regenerate IN PLACE with different vectors: the content stamp
-    # (mtime_ns+size) changes, so the key must change and the codebook
-    # must be refit from the new data — a path-only key would return cb1
-    write_emb(25.0)
-    cb3 = e._ivf_codebook_cached(spark, str(tmp_path), n_lists=2,
-                                 kmeans_iters=2, seed=7)
-    assert cb3 != cb1
+    try:
+        write_emb(1.0)
+        cb1 = e._ivf_codebook_cached(spark, str(tmp_path), n_lists=2,
+                                     kmeans_iters=2, seed=7)
+        # identical bytes -> cache hit, bit-equal codebook
+        cb2 = e._ivf_codebook_cached(spark, str(tmp_path), n_lists=2,
+                                     kmeans_iters=2, seed=7)
+        assert cb2 == cb1
+        # regenerate IN PLACE with different vectors: the content stamp
+        # (mtime_ns+size) changes, so the key must change and the codebook
+        # must be refit from the new data — a path-only key would return cb1
+        write_emb(25.0)
+        cb3 = e._ivf_codebook_cached(spark, str(tmp_path), n_lists=2,
+                                     kmeans_iters=2, seed=7)
+        assert cb3 != cb1
+    finally:
+        if cache_dir.is_dir():
+            for p in set(cache_dir.iterdir()) - before:
+                p.unlink(missing_ok=True)
 
 
 def test_jaccard_prefix_exact_at_all_thresholds(spark):

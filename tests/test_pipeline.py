@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from deep_ner_spark import datagen, textfns
 from deep_ner_spark.operators.features import (
     fit_classes_list,
-    fit_shape_vocab,
     turn_feature_matrix,
 )
 from deep_ner_spark.operators.labeling import label_tokens_colocated
@@ -44,16 +43,25 @@ def reference_vocab(t):
     return tuple(s for s in sorted(counts) if counts[s] >= 3)
 
 
-def test_shape_vocab_parity(data, spark):
-    tdf, _, _, t, _, _ = data
-    toks = tokenize_turns(tdf)
-    assert fit_shape_vocab(toks) == reference_vocab(t)
+def reference_matrix(toks, vocab, max_seq_length, emb_dim):
+    """Padded [max_seq_length, F] matrix of one tokenized turn, built by
+    the pure reference functions."""
+    tags = [textfns.heuristic_pos_dep(x, i) for i, x in enumerate(toks)]
+    return turn_feature_matrix(
+        toks,
+        [textfns.shape_of_string(x) for x in toks],
+        [p for p, _ in tags],
+        [d for _, d in tags],
+        vocab,
+        max_seq_length,
+        emb_dim,
+    )
 
 
 def test_fit_shape_vocab_from_text_equals_tokenized_fit(data, spark):
     """The count-only fit pass (the flagship's vocab source) must produce
-    the exact vocabulary of the full tokenized fit and of the reference
-    computation."""
+    the exact vocabulary of the reference computation (tokenize every
+    normalized turn, count non-empty shapes, keep frequency >= 3)."""
     from deep_ner_spark.operators.features import fit_shape_vocab_from_text
 
     tdf, _, _, t, _, _ = data
@@ -84,12 +92,7 @@ def test_per_turn_text_equality_and_feature_parity(data, spark):
         triples = textfns.tokenize_with_bounds(norm)
         toks = [x for x, _, _ in triples]
         assert r["tokens"] == toks
-        shapes = [textfns.shape_of_string(x) for x in toks]
-        tags = [textfns.heuristic_pos_dep(x, i) for i, x in enumerate(toks)]
-        want = turn_feature_matrix(
-            toks, shapes, [p for p, _ in tags], [d for _, d in tags],
-            want_vocab, MAX_SEQ, EMB,
-        )
+        want = reference_matrix(toks, want_vocab, MAX_SEQ, EMB)
         from deep_ner_spark.operators.features import decode_feature_matrix
 
         got = decode_feature_matrix(r["features"], r["feature_width"])
@@ -98,33 +101,6 @@ def test_per_turn_text_equality_and_feature_parity(data, spark):
         assert got.shape == (n, want.shape[1])
         assert np.allclose(got, want[:n]), (turn.conv_id, turn.turn_idx)
         assert np.allclose(want[n:], 0.0)
-
-
-def test_padded_feature_matrix_parity(data, spark):
-    """padded=True reproduces the reference's full [max_seq, F] matrices."""
-    from deep_ner_spark.operators.features import with_feature_matrix
-    from deep_ner_spark.operators.tokens import tokenize_turns
-
-    tdf, _, _, t, _, _ = data
-    toks = tokenize_turns(tdf)
-    vocab = reference_vocab(t)
-    out = with_feature_matrix(toks, vocab, MAX_SEQ, EMB, padded=True, fmt="array")
-    rows = {(r["conv_id"], r["turn_idx"]): r for r in out.limit(2000).collect()}
-    checked = 0
-    for _, turn in t.head(40).iterrows():
-        r = rows[(turn.conv_id, turn.turn_idx)]
-        toks_ = textfns.tokenize(textfns.normalize_text(turn.text))
-        shapes = [textfns.shape_of_string(x) for x in toks_]
-        tags = [textfns.heuristic_pos_dep(x, i) for i, x in enumerate(toks_)]
-        want = turn_feature_matrix(
-            toks_, shapes, [p for p, _ in tags], [d for _, d in tags],
-            vocab, MAX_SEQ, EMB,
-        )
-        got = np.array(r["features"], dtype=np.float32)
-        assert got.shape == want.shape
-        assert np.allclose(got, want)
-        checked += 1
-    assert checked == 40
 
 
 def test_lag_lead_counts_consistent(data, spark):
@@ -190,47 +166,19 @@ def test_entity_spans_slice_to_phrases(data, spark):
         assert row.text[row.start:row.end] in phrases
 
 
-def test_fused_featurize_cache_cap_resets_without_changing_output():
-    """The per-task vector table is bounded (ADVICE r3): PySpark unpickles
-    the udf for every task, so the table lives for one task's Arrow
-    batches, and when the distinct-triple count exceeds cache_max_entries
-    it resets BETWEEN those batches.  A capped udf must emit byte-identical
-    features to an uncapped one across repeated calls (rows recomputed, not
-    stale)."""
-    import pandas as pd
-
-    from deep_ner_spark.operators.features import make_fused_featurize_udf
-
-    vocab = ("a", "A", "D")
-    texts = pd.Series(
-        ["alpha beta 42", "Gamma delta", "x1 y2 z3 alpha", "", "beta 42"]
-    )
-    free = make_fused_featurize_udf(vocab, 8, emb_dim=4).func
-    capped = make_fused_featurize_udf(vocab, 8, emb_dim=4, cache_max_entries=2).func
-    ref = free(texts)
-    for _ in range(3):  # several batches: reset fires between each
-        got = capped(texts)
-        assert list(got.columns) == list(ref.columns)
-        for c in ref.columns:
-            assert list(got[c].map(bytes) if c == "features" else got[c].map(tuple)) == list(
-                ref[c].map(bytes) if c == "features" else ref[c].map(tuple)
-            ), c
-
-
-def test_arrow_featurize_fn_matches_pandas_udf_bitwise(spark):
-    """The r8 mapInArrow featurize (zero-copy binary column, chunked
-    output batches) must emit byte-identical features and identical
-    token/bounds arrays to the struct-pandas_udf path it replaced,
-    including None/empty texts, truncation past max_seq_length, the
-    emit_linguistics variant, and a chunk size that forces mid-batch
-    splits."""
-    import pandas as pd
+def test_arrow_featurize_fn_matches_pure_reference():
+    """The mapInArrow featurize body (zero-copy binary column, chunked
+    output batches, bounded per-task vector table) must emit, for every
+    turn, exactly the real-token rows of the pure ``turn_feature_matrix``
+    bit for bit, plus the tokens and bounds of ``tokenize_with_bounds``.
+    The edge corpus covers None/empty texts, truncation past
+    max_seq_length, Unicode punctuation and a passthrough column;
+    ``chunk_rows=2`` forces mid-batch splits, and ``cache_max_entries=2``
+    forces a table reset between chunks across repeated calls (rows
+    recomputed, not stale)."""
     import pyarrow as pa
 
-    from deep_ner_spark.operators.features import (
-        make_fused_featurize_arrow_fn,
-        make_fused_featurize_udf,
-    )
+    from deep_ner_spark.operators.features import make_fused_featurize_arrow_fn
 
     vocab = ("a", "A", "Aa", "D")
     texts = [
@@ -240,31 +188,31 @@ def test_arrow_featurize_fn_matches_pandas_udf_bitwise(spark):
         "x " * 40,  # truncates past max_seq_length=8
         "Gamma—delta v2.7, ok?",
     ]
-    for ling in (False, True):
-        ref = make_fused_featurize_udf(
-            vocab, 8, emb_dim=4, emit_linguistics=ling
-        ).func(pd.Series(texts))
-        rb = pa.RecordBatch.from_arrays(
-            [pa.array(["meta"] * len(texts)), pa.array(texts)],
-            names=["other", "norm_text"],
-        )
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(["meta"] * len(texts)), pa.array(texts)],
+        names=["other", "norm_text"],
+    )
+    for cap in (None, 2):
         fn = make_fused_featurize_arrow_fn(
-            vocab, 8, emb_dim=4, emit_linguistics=ling, chunk_rows=2
+            vocab, 8, emb_dim=4, chunk_rows=2, cache_max_entries=cap
         )
-        got = pa.Table.from_batches(list(fn(iter([rb])))).to_pandas()
-        assert list(got["other"]) == ["meta"] * len(texts)  # passthrough
-        name_map = {"pos": "pos_tags", "dep": "dep_tags"}
-        for c in ref.columns:
-            g = got[name_map.get(c, c)]
-            if c == "features":
-                assert [bytes(x) for x in g] == [bytes(x) for x in ref[c]], c
-            else:
-                assert [list(x) for x in g] == [list(x) for x in ref[c]], c
+        for _ in range(3):
+            got = pa.Table.from_batches(list(fn(iter([rb])))).to_pylist()
+            assert [r["other"] for r in got] == ["meta"] * len(texts)
+            for text, r in zip(texts, got):
+                triples = textfns.tokenize_with_bounds(text or "")
+                toks = [t for t, _, _ in triples]
+                assert r["tokens"] == toks, (cap, text)
+                assert r["starts"] == [s for _, s, _ in triples], (cap, text)
+                assert r["ends"] == [e for _, _, e in triples], (cap, text)
+                want = reference_matrix(toks, vocab, 8, 4)
+                n = min(len(toks), 8)
+                assert r["features"] == want[:n].tobytes(), (cap, text)
 
 
 def test_arrow_featurize_cache_cap_resets_without_changing_output():
-    """Same bounded-cache contract as the pandas_udf path: a capped arrow
-    fn emits byte-identical features across repeated calls."""
+    """A capped arrow fn emits byte-identical features to an uncapped one
+    across repeated calls."""
     import pyarrow as pa
 
     from deep_ner_spark.operators.features import make_fused_featurize_arrow_fn

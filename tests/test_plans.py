@@ -107,20 +107,23 @@ def test_cosine_topk_broadcasts_query_side(spark):
 
 
 def test_vocab_agg_has_partial_aggregation(tables, spark):
-    """The shape-vocab fit must map-side combine (partial_count before the
-    exchange) so the shuffle moves (shape, count) pairs, not tokens."""
-    from deep_ner_spark.operators.tokens import tokenize_turns
+    """The flagship's shape-vocab fit (the counts frame
+    ``fit_shape_vocab_from_text`` collects) must map-side combine: a
+    partial_sum aggregate sits below its one hash exchange, so the
+    shuffle moves (shape, count) pairs, not tokens."""
+    from deep_ner_spark.operators.features import _shape_counts
 
     tdf, _ = tables
-    toks = tokenize_turns(tdf)
-    agg = (
-        toks.select(F.explode("shapes").alias("shape"))
-        .groupBy("shape")
-        .count()
-        .where(F.col("count") >= 3)
+    plan = plan_of(_shape_counts(tdf, 3, "text"))
+    ex = exchanges(plan)
+    assert [kind for kind, _ in ex] == ["hashpartitioning"], plan
+    # formatted node ids number children before parents
+    partial = re.search(
+        r"\((\d+)\) HashAggregate\s*\n(?:[^\n]+\n)*?Functions \[\d+\]: \[partial_sum",
+        plan,
     )
-    plan = plan_of(agg)
-    assert "partial_count" in plan or "Partial" in plan, plan
+    exchange = re.search(r"\((\d+)\) Exchange\s*\n", plan)
+    assert partial and int(partial.group(1)) < int(exchange.group(1)), plan
 
 
 def test_whole_stage_codegen_covers_window_ops(tables, spark):
